@@ -6,14 +6,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.base(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // local-dev filter: SPARK_GRAFT_ONLY=q_a,q_b runs a subset (the
     // driver never sets it; scripts/check_oracle.py replays the subset)
@@ -68,7 +62,7 @@ object Verify {
       }
       // release checkpoint-backed results (dedup pipelines) between
       // queries so a 60-query run doesn't accumulate executor blocks
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -2,49 +2,57 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
+
 /** Storm-proof interleaved A/B of a RUNTIME SQL conf: for each rep, runs
-  * every named query once under arm A (stock) and once under arm B (the
-  * overlay from SPARK_GRAFT_CONF applied via spark.conf.set), alternating
-  * within one JVM so host noise hits both arms equally. Reports per-arm
-  * minima.
+  * every named query once under arm A (Bench's conf set) and once under
+  * arm B (the overlay from SPARK_GRAFT_CONF applied via spark.conf.set),
+  * alternating within one JVM so host noise hits both arms equally.
+  * Reports per-arm minima.
   *
-  *   SPARK_GRAFT_CONF="spark.sql.adaptive.coalescePartitions.minPartitionSize=64k" \
+  *   SPARK_GRAFT_CONF="spark.sql.adaptive.coalescePartitions.minPartitionSize=1m" \
   *     sbt "runMain graft.tools.ConfAB /root/testdata/sf0.1 5 q_a q_b"
   */
 object ConfAB {
+
+  /** The two arms of an overlay: [[b]] sets every overlay key; [[a]]
+    * restores each key to its value when the arms were built, and unsets
+    * the keys that had none (a key with no default has no stock value to
+    * set back). */
+  private[graft] final class Arms(spark: SparkSession,
+      overlay: Seq[(String, String)]) {
+    private val stock = overlay.map { case (k, _) => k -> spark.conf.getOption(k) }
+    def a(): Unit = stock.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    def b(): Unit = overlay.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** `"k=v;k2=v2"` -> its (key, value) pairs; empty keys are skipped */
+  private[graft] def parseOverlay(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.flatMap { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => Some(k.trim -> v.trim)
+        case _ => None
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val names = args.drop(2).toSeq
-    val overlay: Seq[(String, String)] = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").toSeq.flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => Some(k.trim -> v.trim)
-          case _ => None
-        }
-      }
+    val overlay = parseOverlay(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
     require(overlay.nonEmpty, "SPARK_GRAFT_CONF must carry the B-arm confs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.bench(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // warm-up
-    val stock: Map[String, String] =
-      overlay.map { case (k, _) => (k, spark.conf.get(k)) }.toMap
+    val arms = new Arms(spark, overlay)
     val qs = graft.SparkEntry.defs.map(d => d.name -> d.fn).toMap
 
     def run(n: String): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      GraftSession.release(spark)
       val t0 = System.nanoTime()
       qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
@@ -55,14 +63,8 @@ object ConfAB {
     // alternate arm order per rep so neither arm systematically enjoys
     // the warmer caches of running second
     for (r <- 1 to reps; n <- names) {
-      def runA(): Unit = {
-        overlay.foreach { case (k, _) => spark.conf.set(k, stock(k)) }
-        a(n) = run(n) :: a.getOrElse(n, Nil)
-      }
-      def runB(): Unit = {
-        overlay.foreach { case (k, v) => spark.conf.set(k, v) }
-        b(n) = run(n) :: b.getOrElse(n, Nil)
-      }
+      def runA(): Unit = { arms.a(); a(n) = run(n) :: a.getOrElse(n, Nil) }
+      def runB(): Unit = { arms.b(); b(n) = run(n) :: b.getOrElse(n, Nil) }
       if (r % 2 == 1) { runA(); runB() } else { runB(); runA() }
     }
     for (n <- names) {

@@ -130,50 +130,23 @@ object DiffProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("dsir")) {
+    val sweep = args.headOption.filter(m => m == "dsir" || m == "sweep")
+    // base conf set: ANSI off, so a 0/0 jaccard on a tiny subsample reads
+    // NULL instead of killing the sweep
+    val spark = graft.GraftSession.base(if (sweep.isDefined) 16 else 8)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    if (sweep.isDefined) {
       val dirs =
         if (args.length > 1) args.drop(1).toSeq
         else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
           "/root/testdata/sf0.1")
-      val spark = SparkSession.builder()
-        .master("local[16]")
-        .config("spark.sql.shuffle.partitions", 16)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.ansi.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      dsirSweep(spark, dirs)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("sweep")) {
-      val dirs =
-        if (args.length > 1) args.drop(1).toSeq
-        else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-          "/root/testdata/sf0.1")
-      val spark = SparkSession.builder()
-        .master("local[16]")
-        .config("spark.sql.shuffle.partitions", 16)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // the engine posture (Verify/Bench): a 0/0 jaccard on a tiny
-        // subsample must read NULL, not kill the sweep
-        .config("spark.sql.ansi.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      simhashSweep(spark, dirs)
+      if (sweep.contains("dsir")) dsirSweep(spark, dirs)
+      else simhashSweep(spark, dirs)
       spark.stop()
       return
     }
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.documents(spark, dir)
 
     println(s"== minhash ($dir)")

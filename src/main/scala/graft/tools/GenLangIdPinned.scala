@@ -78,11 +78,7 @@ object GenLangIdPinned {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.base(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val out = render(trainPinned(spark))
     val path = java.nio.file.Paths.get(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Repeated in-JVM timing for named queries: runs each query `reps` times
   * and reports all times plus the minimum (the stable signal under noisy
@@ -14,30 +14,14 @@ object MicroBench {
     val names: Seq[String] =
       if (args.length > 2) args.drop(2).toSeq
       else Seq("q_dedup_minhash", "q_dedup_simhash", "q_dedup_ngram", "q_dedup_cosine")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's shuffle-writer selection (see Bench.scala) so
-      // micro timings stay comparable to the official fold
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
-      // match Bench's AQE coalesce floor (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // Bench's conf set, so micro timings stay comparable to the official fold
+    val builder = GraftSession.bench(cpus)
     // A/B experiment hook: SPARK_GRAFT_CONF="k=v;k2=v2" overlays extra
     // session confs so a config hypothesis can be measured without a
     // rebuild (official Bench runs never read this)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
+    ConfAB.parseOverlay(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+      .foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count() // warm-up
@@ -48,8 +32,7 @@ object MicroBench {
     val qs = graft.SparkEntry.defs.map(d => d.name -> d.fn).toMap
     names.foreach { n =>
       val times = (1 to reps).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        GraftSession.release(spark)
         val t0 = System.nanoTime()
         // noop sink, matching Bench's r21 timed action (count() lets the
         // optimizer prune subtrees — guide §1.4)

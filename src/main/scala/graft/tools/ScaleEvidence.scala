@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Linearity evidence for the dedup/ANN family: run the bucketed
   * pipelines on a data dir and print one JSON line per operator with
@@ -18,15 +19,8 @@ object ScaleEvidence {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val label = args.lift(1).getOrElse(dir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.base(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -392,20 +386,11 @@ object ScaleEvidence {
       .map(_.split(",").map(_.trim).toSet)
     val ops2 = opFilter.fold(ops)(f => ops.filter(o => f(o._1)))
 
-    // Shuffle-volume accounting (round-11): stage-completion listener
-    // summing shuffle WRITE bytes. Volume per op = counter delta around
-    // the timed action (a short settle pause lets the listener bus
-    // drain; coarse MB-level evidence, not a benchmark gate).
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
+    // Shuffle-volume accounting (round-11): the shuffle WRITE bytes of
+    // the stages completed during the timed action (coarse MB-level
+    // evidence, not a benchmark gate).
+    val clock = new GraftSession.TaskClock
+    spark.sparkContext.addSparkListener(clock)
 
     // Same storm guard as Bench: rep passes interleave across ALL ops so a
     // multi-minute steal storm poisons at most one pass per op, and
@@ -414,16 +399,13 @@ object ScaleEvidence {
     val rows = Array.fill(ops2.size)(0L)
     val shuf = Array.fill(ops2.size)(0L)
     for (_ <- 1 to 3; i <- ops2.indices) {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      Thread.sleep(200) // settle the listener bus before the baseline read
-      val s0 = shuffleBytes.get()
+      GraftSession.release(spark)
+      clock.settledStages() // drop the stages of earlier ops
       val t0 = System.nanoTime()
       val n = ops2(i)._2()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
-      if (sec < times(i)) { times(i) = sec; shuf(i) = shuffleBytes.get() - s0 }
+      val bytes = clock.settledStages().map(_.shuffleWriteBytes).sum
+      if (sec < times(i)) { times(i) = sec; shuf(i) = bytes }
       rows(i) = n
     }
     for (i <- ops2.indices)

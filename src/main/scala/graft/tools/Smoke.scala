@@ -11,14 +11,8 @@ import graft.core.TaskGraph
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    implicit val spark: SparkSession =
+      graft.GraftSession.base(4).appName("graft-smoke").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -1,9 +1,6 @@
 package graft.tools
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Per-stage wall/CPU breakdown for declared queries — the empirical
   * half of the optimization loop (spark_optimization_guide §1.1) when
@@ -18,77 +15,42 @@ import org.apache.spark.sql.SparkSession
   */
 object StageProfile {
 
-  private final case class St(name: String, tasks: Int, runMs: Long,
-      cpuNs: Long, wallMs: Long)
-
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = args(1).toInt.max(1)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Bench's shuffle-writer selection (see Bench.scala)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "2"))
-      // match Bench's AQE coalesce floor (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.bench(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the Bench warm-up pair, so rep 1 is not billed JVM/codegen startup
-    spark.read.parquet(s"$dir/lineitem.parquet").count()
-    spark.read.parquet(s"$dir/region.parquet").groupBy("r_regionkey")
-      .agg(org.apache.spark.sql.functions.sum(
-        org.apache.spark.sql.functions.col("r_regionkey").cast("decimal(27,6)")))
-      .count()
+    val clock = new GraftSession.TaskClock
+    spark.sparkContext.addSparkListener(clock)
+    GraftSession.warmUp(spark, dir)
 
     val defs = graft.SparkEntry.defs.filter(d => names.contains(d.name))
     for (name <- names; d <- defs.find(_.name == name)) {
       var bestSec = Double.MaxValue
-      var bestStages: Seq[(Int, St)] = Nil
+      var bestStages: Seq[GraftSession.StageRow] = Nil
       for (_ <- 1 to reps) {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        val stages = TrieMap.empty[Int, St]
-        val listener = new SparkListener {
-          override def onStageCompleted(
-              e: SparkListenerStageCompleted): Unit = {
-            val si = e.stageInfo
-            val wall = (for {
-              s <- si.submissionTime; c <- si.completionTime
-            } yield c - s).getOrElse(0L)
-            stages(si.stageId) = St(si.name.linesIterator.next(),
-              si.numTasks, si.taskMetrics.executorRunTime,
-              si.taskMetrics.executorCpuTime, wall)
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
+        GraftSession.release(spark)
+        clock.settledStages() // drop the stages of earlier runs
         val t0 = System.nanoTime()
         // noop sink, matching Bench's r21 timed action (count() lets the
         // optimizer prune subtrees — guide §1.4)
         d.fn(spark, dir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200) // let the listener bus drain
-        spark.sparkContext.removeSparkListener(listener)
-        if (sec < bestSec) { bestSec = sec; bestStages = stages.toSeq }
+        val stages = clock.settledStages()
+        if (sec < bestSec) { bestSec = sec; bestStages = stages }
       }
-      val byWall = bestStages.sortBy(-_._2.wallMs)
+      val byWall = bestStages.sortBy(-_.wallMs)
       val nStages = bestStages.size
-      val sumWall = bestStages.map(_._2.wallMs).sum / 1e3
-      val sumCpu = bestStages.map(_._2.cpuNs).sum / 1e9
-      val sumRun = bestStages.map(_._2.runMs).sum / 1e3
+      val sumWall = bestStages.map(_.wallMs).sum / 1e3
+      val sumCpu = bestStages.map(_.cpuNs).sum / 1e9
+      val sumRun = bestStages.map(_.runMs).sum / 1e3
       println(f"[profile] $name best=${bestSec}%.2fs stages=$nStages " +
         f"stageWallSum=${sumWall}%.2fs taskRunSum=${sumRun}%.2fs " +
         f"taskCpuSum=${sumCpu}%.2fs")
-      byWall.take(18).foreach { case (id, s) =>
-        println(f"[profile]   stage $id%4d tasks=${s.tasks}%3d " +
+      byWall.take(18).foreach { s =>
+        println(f"[profile]   stage ${s.id}%4d tasks=${s.tasks}%3d " +
           f"wall=${s.wallMs / 1e3}%6.2fs run=${s.runMs / 1e3}%6.2fs " +
           f"cpu=${s.cpuNs / 1e9}%6.2fs  ${s.name.take(90)}")
       }

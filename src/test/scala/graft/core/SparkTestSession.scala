@@ -4,15 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run. */
 object SparkTestSession {
+  val Cores = 4
+
   lazy val get: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val s = graft.GraftSession.base(Cores).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

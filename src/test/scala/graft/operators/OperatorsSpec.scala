@@ -1797,8 +1797,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("semantic dedup leaves no cached plans or stranded blocks") {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    graft.GraftSession.release(spark)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val pairs = Dedup.semanticNearDups(emb, "vec_id", "embedding", k = 8,
       threshold = 0.4)

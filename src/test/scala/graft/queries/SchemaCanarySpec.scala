@@ -185,6 +185,20 @@ class SchemaCanarySpec extends AnyFunSuite {
       }
     }
 
+    test(s"[$sf] every lineitem row has its order (q21's foreign key)") {
+      import org.apache.spark.sql.functions._
+      // q21_suppliers_kept_waiting's window rewrite equals the oracle's
+      // EXISTS only when the lineitem⋈orders inner join drops no lineitem
+      // row (RelationalQueries, the q21 window comment)
+      val orphans = Tables.lineitem(spark, dir)
+        .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"),
+          "left_anti")
+      val n = orphans.count()
+      assert(n == 0, s"$n lineitem rows have no order (e.g. l_orderkey " +
+        s"${orphans.limit(3).collect().map(_.getAs[Any]("l_orderkey")).mkString(", ")}" +
+        ") — q21's window rewrite no longer matches its EXISTS oracle")
+    }
+
     test(s"[$sf] id ranges the declared queries select on are inhabited") {
       import org.apache.spark.sql.functions._
       // q_knn_ivf / q_knn_join take vec_id < 20 as the query batch and
