@@ -80,6 +80,15 @@ final case class DimGroup(
     base.select(dimCols ++ nodeCols: _*)
   }
 
+  /** Distinct labels of one dim, as a column named after the dim. */
+  def labels(dim: String): DataFrame = frame(needPositional = true).select(dim).distinct()
+
+  /** Building [[labels]] runs no Spark job: there is no positional dim,
+    * or the table is in memory. A file-backed positional group pays a
+    * `zipWithIndex` pass for them.
+    */
+  def labelsFree: Boolean = positionalDim.isEmpty || TaskGraph.isLocalPlan(df)
+
   /** Labels of one dim, in array order (for re-map validation). */
   def labelFrame(dim: String): DataFrame =
     (if (labelCols.contains(dim)) df.select(col(labelCols(dim)).as(dim))
@@ -283,7 +292,7 @@ final case class TaskGraph(
     */
   def indices(dim: String): DataFrame =
     groups.find(_.dims.contains(dim)) match {
-      case Some(g) => g.frame(needPositional = true).select(dim).distinct()
+      case Some(g) => g.labels(dim)
       case None if groupbyDims.contains(dim) => result(dim).select(dim).distinct()
       case None => throw new GraftException(s"unknown dim '$dim'")
     }
@@ -458,42 +467,15 @@ final case class TaskGraph(
         // same call may already have replaced the pre-call group — a
         // lookup via the pre-call catalog would miss it)
         gs.find(_.valueCols.contains(n)).foreach { old =>
-          // Re-map rules (reference node_values.py:54-93): same labels and
-          // values -> no-op; same labels, new values -> replace; different
-          // labels -> error. Dim names may differ when auto-generated.
-          if (old.dims.size != group0.dims.size)
-            throw new GraftException(s"Node '$n' has already been mapped")
-          // Eager label/value equality only for metadata-scale (in-memory)
-          // tables — the reference's whole universe. A file-backed re-map
-          // skips the eager compare (it would be a full scan at graph-build
-          // time) and takes deterministic replace semantics.
-          val bothLocal =
-            TaskGraph.isLocalPlan(old.df) && TaskGraph.isLocalPlan(group0.df)
-          val labelsMatch = !bothLocal ||
-            old.dims.zip(group0.dims).forall { case (od, nd) =>
-              TaskGraph.sameData(
-                old.labelFrame(od).toDF("l"), group0.labelFrame(nd).toDF("l"))
-            }
-          if (!labelsMatch)
-            throw new GraftException(
-              s"Node '$n' has already been mapped with different indices")
-          // strict mode: a file-backed re-map still gets a length guard
-          // (full equality stays deferred — see strictValidation)
-          if (!bothLocal && TaskGraph.strictValidation(group0.df))
-            old.dims.zip(group0.dims).foreach { case (od, nd) =>
-              TaskGraph.requireSameLength(od,
-                old.labelFrame(od), group0.labelFrame(nd))
-            }
+          // Dim names may differ when auto-generated.
+          val identical = identicalRemap(n, old, group0)
           if (renameTo.exists(_ != old.dims))
             throw new GraftException(
               "Nodes re-mapped in one call belong to groups with different dims")
           renameTo = Some(old.dims)
           remapDims ++= old.dims
           remapDims ++= group0.dims
-          val valuesMatch = bothLocal && TaskGraph.sameData(
-            old.df.select(col(old.valueCols(n)).as("v")),
-            group0.df.select(col(group0.valueCols(n)).as("v")))
-          if (valuesMatch) freshCols -= n // no-op
+          if (identical) freshCols -= n // no-op
           else gs = gs.map(og => // replace: new mapping wins
             if (og.valueCols.contains(n)) og.copy(valueCols = og.valueCols - n)
             else og)
@@ -514,56 +496,62 @@ final case class TaskGraph(
     // values are identical — the dims become SHARED and descendants align
     // on them (reference node_values.py:79-90: same index name requires
     // equal index values). Conflicting labels raise.
+    val strict = TaskGraph.strictValidation(group.df)
     group.dims.filterNot(remapDims.contains).foreach { dm =>
-      // Only touch a group's frame when a collision actually exists AND
-      // its positional labels are free to materialize: constructing the
-      // positional frame of a file-backed group is a full-scan Spark job
-      // (ZippedWithIndexRDD computes partition offsets at CONSTRUCTION
-      // time) that labelsCompatible's metadata-scale guard would then
-      // discard anyway — fact-scale label sets defer to join semantics.
-      def safeLabels(g: DimGroup): Option[DataFrame] =
-        if (g.positionalDim.isEmpty || TaskGraph.isLocalPlan(g.df))
-          Some(g.frame(needPositional = true).select(dm).distinct())
-        else None
-      val collidingGroups =
-        gs.filter(og => og.valueCols.nonEmpty && og.dims.contains(dm))
-      val collidesGroupby = groupbyDims.contains(dm)
-      if (collidingGroups.nonEmpty || collidesGroupby) {
-        val strict = TaskGraph.strictValidation(group.df)
-        // strict-mode fallback labels: built even for file-backed
-        // positional groups (accepts the zipWithIndex construction job)
-        def allLabels(g: DimGroup): DataFrame =
-          g.frame(needPositional = true).select(dm).distinct()
-        safeLabels(group) match {
-          case Some(newLabels) =>
-            collidingGroups.foreach { og =>
-              safeLabels(og) match {
-                case Some(oldLabels) =>
-                  if (!TaskGraph.labelsCompatible(oldLabels, newLabels))
-                    throw new GraftException(
-                      s"""Conflicting index values for index name "$dm"""")
-                case None if strict =>
-                  TaskGraph.requireSameLength(dm, allLabels(og), newLabels)
-                case None => ()
-              }
-            }
-            if (collidesGroupby &&
-                !TaskGraph.labelsCompatible(indices(dm), newLabels))
-              throw new GraftException(
-                s"""Conflicting index values for index name "$dm"""")
-          case None if strict =>
-            val newLabels = allLabels(group)
-            collidingGroups.foreach(og =>
-              TaskGraph.requireSameLength(dm, allLabels(og), newLabels))
-            if (collidesGroupby)
-              TaskGraph.requireSameLength(dm, indices(dm), newLabels)
-          case None => ()
-        }
-      }
+      gs.filter(og => og.valueCols.nonEmpty && og.dims.contains(dm)).foreach(og =>
+        checkSharedDim(dm, og.labels(dm), og.labelsFree,
+          group.labels(dm), group.labelsFree, strict))
+      if (groupbyDims.contains(dm))
+        checkSharedDim(dm, indices(dm), aFree = true,
+          group.labels(dm), group.labelsFree, strict)
     }
     if (freshCols.isEmpty) return copy(dag = d, groups = gs.filter(_.valueCols.nonEmpty))
     copy(dag = d, groups = gs.filter(_.valueCols.nonEmpty) :+ group.copy(valueCols = freshCols))
   }
+
+  /** The re-map rule of `map` and splice (reference node_values.py:54-93):
+    * node `n`, held by `old`, arrives again in `incoming`. Same labels and
+    * values -> no-op (returns true); same labels, new values -> replace
+    * (returns false); a different dim count or different labels raise.
+    *
+    * Eager label/value equality runs only when both tables are in memory —
+    * the reference's whole universe. A file-backed re-map skips the compare
+    * (a full scan at graph-build time) and takes replace semantics; strict
+    * mode still gives it a length guard (see strictValidation).
+    */
+  private def identicalRemap(n: String, old: DimGroup, incoming: DimGroup): Boolean = {
+    if (old.dims.size != incoming.dims.size)
+      throw new GraftException(s"Node '$n' has already been mapped")
+    val dimPairs = old.dims.zip(incoming.dims)
+    val bothLocal = TaskGraph.isLocalPlan(old.df) && TaskGraph.isLocalPlan(incoming.df)
+    if (bothLocal && !dimPairs.forall { case (od, nd) =>
+        TaskGraph.sameData(old.labelFrame(od).toDF("l"), incoming.labelFrame(nd).toDF("l"))
+      })
+      throw new GraftException(s"Node '$n' has already been mapped with different indices")
+    if (!bothLocal && TaskGraph.strictValidation(incoming.df))
+      dimPairs.foreach { case (od, nd) =>
+        TaskGraph.requireSameLength(od, old.labelFrame(od), incoming.labelFrame(nd))
+      }
+    bothLocal && TaskGraph.sameData(
+      old.df.select(col(old.valueCols(n)).as("v")),
+      incoming.df.select(col(incoming.valueCols(n)).as("v")))
+  }
+
+  /** The shared-dim label rule of `map` and splice (reference
+    * node_values.py:79-90): two label sets `a` and `b` claimed for `dim`
+    * must be equal. A side is "free" when building it runs no Spark job
+    * (see [[DimGroup.labelsFree]]): a file-backed positional group's labels
+    * are a `zipWithIndex` pass at CONSTRUCTION time, so they are built only
+    * in strict mode, which checks lengths; otherwise the check defers to
+    * the dim join's relational semantics. Two free sides compare eagerly
+    * when metadata-scale (see labelsCompatible).
+    */
+  private def checkSharedDim(dim: String, a: => DataFrame, aFree: Boolean,
+      b: => DataFrame, bFree: Boolean, strict: Boolean): Unit =
+    if (aFree && bFree) {
+      if (!TaskGraph.labelsCompatible(a, b))
+        throw new GraftException(s"""Conflicting index values for index name "$dim"""")
+    } else if (strict) TaskGraph.requireSameLength(dim, a, b)
 
   // ---------------------------------------------------------------- derive
 
@@ -802,25 +790,10 @@ final case class TaskGraph(
       if (og.dims != newDims)
         throw new GraftException(
           s"Node '$key' has already been mapped with different indices")
-      // eager label validation only when the positional frame is free to
-      // build (no positional dim, or in-memory) — file-backed positional
-      // labels defer to join semantics, as in addGroup; strict mode adds
-      // the length guard on the deferred pairs
-      og.dims.foreach { dm =>
-        val ogSafe = og.positionalDim.isEmpty || TaskGraph.isLocalPlan(og.df)
-        val otherSafe = other.groups.find(_.dims.contains(dm)).forall(g =>
-          g.positionalDim.isEmpty || TaskGraph.isLocalPlan(g.df))
-        if (ogSafe && otherSafe) {
-          if (!TaskGraph.labelsCompatible(
-              og.frame(needPositional = true).select(dm).distinct(),
-              other.indices(dm)))
-            throw new GraftException(
-              s"""Conflicting index values for index name "$dm"""")
-        } else if (TaskGraph.strictValidation(og.df))
-          TaskGraph.requireSameLength(dm,
-            og.frame(needPositional = true).select(dm).distinct(),
-            other.indices(dm))
-      }
+      og.dims.foreach(dm =>
+        checkSharedDim(dm, og.labels(dm), og.labelsFree, other.indices(dm),
+          other.groups.find(_.dims.contains(dm)).forall(_.labelsFree),
+          TaskGraph.strictValidation(og.df)))
       merged = merged.copy(groups = merged.groups
         .map(g => if (g eq og) g.copy(valueCols = g.valueCols - key) else g)
         .filter(_.valueCols.nonEmpty))
@@ -834,28 +807,7 @@ final case class TaskGraph(
       g.valueCols.foreach { case (n, _) =>
         if (merged.isMapped(n)) {
           val old = merged.groups(merged.mappedNode(n))
-          if (old.dims.size != g.dims.size)
-            throw new GraftException(s"Node '$n' has already been mapped")
-          // metadata-scale guard, as in addGroup: eager equality only for
-          // in-memory tables; file-backed re-maps take replace semantics
-          val bothLocal =
-            TaskGraph.isLocalPlan(old.df) && TaskGraph.isLocalPlan(g.df)
-          val labelsMatch = !bothLocal ||
-            old.dims.zip(g.dims).forall { case (od, nd) =>
-              TaskGraph.sameData(old.labelFrame(od).toDF("l"), g.labelFrame(nd).toDF("l"))
-            }
-          if (!labelsMatch)
-            throw new GraftException(
-              s"Node '$n' has already been mapped with different indices")
-          if (!bothLocal && TaskGraph.strictValidation(g.df))
-            old.dims.zip(g.dims).foreach { case (od, nd) =>
-              TaskGraph.requireSameLength(od,
-                old.labelFrame(od), g.labelFrame(nd))
-            }
-          val valuesMatch = bothLocal && TaskGraph.sameData(
-            old.df.select(col(old.valueCols(n)).as("v")),
-            g.df.select(col(g.valueCols(n)).as("v")))
-          if (valuesMatch) fresh -= n // identical: no-op
+          if (identicalRemap(n, old, g)) fresh -= n // identical: no-op
           else merged = merged.copy(groups = merged.groups // replace: incoming wins
             .map(og => if (og eq old) og.copy(valueCols = og.valueCols - n) else og)
             .filter(_.valueCols.nonEmpty))
@@ -865,27 +817,10 @@ final case class TaskGraph(
         }
       }
       if (fresh.nonEmpty) {
-        // shared-dim label consistency across graphs (node_values.py:79-90);
-        // positional frames only built when free (see addGroup)
-        def safeLabels(dg: DimGroup, dim: String): Option[DataFrame] =
-          if (dg.positionalDim.isEmpty || TaskGraph.isLocalPlan(dg.df))
-            Some(dg.frame(needPositional = true).select(dim).distinct())
-          else None
         g.dims.foreach { dim =>
-          merged.groups.filter(og => (og ne g) && og.dims.contains(dim)).foreach { og =>
-            (safeLabels(og, dim), safeLabels(g, dim)) match {
-              case (Some(a), Some(b)) if !TaskGraph.labelsCompatible(a, b) =>
-                throw new GraftException(
-                  s"""Conflicting index values for index name "$dim"""")
-              case (Some(_), Some(_)) => ()
-              case _ if TaskGraph.strictValidation(g.df) =>
-                // at least one side is file-backed: strict length guard
-                TaskGraph.requireSameLength(dim,
-                  og.frame(needPositional = true).select(dim).distinct(),
-                  g.frame(needPositional = true).select(dim).distinct())
-              case _ => ()
-            }
-          }
+          merged.groups.filter(og => (og ne g) && og.dims.contains(dim)).foreach(og =>
+            checkSharedDim(dim, og.labels(dim), og.labelsFree,
+              g.labels(dim), g.labelsFree, TaskGraph.strictValidation(g.df)))
         }
         merged = merged.copy(groups = merged.groups :+ g.copy(valueCols = fresh))
       }
@@ -915,161 +850,134 @@ final case class TaskGraph(
 
   /** The expansion frame of a node: a lazy DataFrame with one label column
     * per dim of the node (named after the dim) plus the node's value column
-    * (named after the node) — plus any co-grouped sibling columns that
-    * arrive free. This replaces the reference's driver-side Cartesian clone
+    * (named after the node) — plus the value columns of the ancestors it is
+    * built from. This replaces the reference's driver-side Cartesian clone
     * expansion (graph.py:367-424): the expansion is *declared* relationally
     * and Catalyst plans it, so it never materializes on the driver and
     * scales to arbitrarily large dims.
     *
-    * Co-grouped predecessors are read from their shared `DimGroup` in one
-    * scan (no self-joins on row identity); independent dims combine via
-    * crossJoin (the reference's chained-map cross product,
-    * graph_test.py:382-402); shared dims via equi-join on the dim label.
+    * One rule builds every frame: a node's rows are the rows of its row
+    * identity, and derived nodes are columns on it. The row identity is a
+    * set of sources — a mapped node's `DimGroup`, a reduce node's own
+    * aggregate, and for a derived node the union of its predecessors'
+    * sources (a bare input adds none). Each source is read once: sources
+    * that share dims equi-join (null-safe) on the dim labels, independent
+    * ones cross join (the reference's chained-map cross product,
+    * graph_test.py:382-402). Every derived ancestor is then one column on
+    * that frame, so a diamond reads its shared ancestor once — the
+    * reference's shared-node dedup — and the plan grows linearly with the
+    * DAG. A repeated label therefore yields one copy per row, in a diamond
+    * as in a chain.
     */
   def result(node: String, needPositional: Boolean = false): DataFrame = {
     require(dag.contains(node), s"unknown node '$node'")
-    val memo = scala.collection.mutable.Map.empty[(String, Boolean), DataFrame]
-    frameOf(node, needPositional, memo)
+    frameOf(Seq(node), needPositional, keep = Set.empty)
   }
 
-  /** Is `d` a positional dim whose labels are not yet materialized? */
-  private def isPositionalDim(d: String): Boolean =
-    groups.exists(g => g.dims.contains(d) && !g.labelCols.contains(d))
-
-  private def frameOf(n: String, needPos: Boolean,
-      memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame =
-    memo.getOrElseUpdate((n, needPos), {
-      if (isMapped(n)) groups(mappedNode(n)).frame(needPos)
-      else reduces.get(n) match {
-        case Some(spec) => reduceFrame(n, spec, needPos, memo)
-        case None =>
-          val preds = dag.predecessors(n)
-          if (preds.isEmpty) {
-            val spark = groups.headOption.map(_.df.sparkSession)
-              .getOrElse(SparkSession.active)
-            spark.range(1).select(lit(null).cast("string").as(n))
-          } else {
-            val base = mergePredFrames(preds, needPos, memo)
-            val attrs = dag.attrs.getOrElse(n, Map.empty)
-            attrs.get("expr") match {
-              case Some(e) => base.withColumn(n, expr(e))
-              case None if preds.size == 1 && base.columns.contains(preds.head) =>
-                base.withColumn(n, col(preds.head))
-              case None =>
-                base.withColumn(n, struct(preds.filter(base.columns.contains).map(col): _*))
-            }
-          }
-      }
-    })
-
-  /** Join predecessor frames on their SHARED DIMS — the row identity. A
-    * pred whose column is already present came along with a co-grouped
-    * sibling (skip — no self-join); preds sharing dims equi-join
-    * (null-safe) on the dim label columns; disjoint dims crossJoin (the
-    * reference's chained-map cross product).
-    *
-    * Joining on dims, not on arbitrary shared columns, matches the
-    * reference's strictly per-index expansion (graph.py:367-424): two
-    * branches of a diamond (a->b, a->c, {b,c}->d) both carry ancestor
-    * value column 'a', and joining on 'a' would cross-match duplicate
-    * values (and silently drop nulls). Instead the duplicated ancestor
-    * columns are dropped from the right side (identical by construction)
-    * and the join keys on the dim labels alone; a positional dim shared by
-    * two predecessors has its label column materialized to serve as the
-    * key.
+  /** Each node's row-identity sources: `Left(group index)` for a mapped
+    * node, `Right(node)` for a reduce node, the union of its predecessors'
+    * sources for any other node.
     */
-  private def mergePredFrames(preds: Seq[String], needPos: Boolean,
-      memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame = {
-    val occurrences = preds.flatMap(p => dimsOf(p).distinct)
-    val sharedDims = occurrences.groupBy(identity).collect {
-      case (d, occ) if occ.size > 1 => d
-    }.toSet
-    val mergeNeedPos = needPos || sharedDims.exists(isPositionalDim)
-    var acc: DataFrame = null
-    var accDims = Set.empty[String]
-    preds.foreach { p =>
-      if (acc == null) {
-        acc = frameOf(p, mergeNeedPos, memo)
-        accDims = dimsOf(p).toSet
-      } else if (!acc.columns.contains(p)) {
-        val f = frameOf(p, mergeNeedPos, memo)
-        val joinDims = accDims.intersect(dimsOf(p).toSet).toSeq.sorted
-        acc = dimJoin(acc, f, joinDims)
-        accDims ++= dimsOf(p)
-      }
+  private lazy val sourcesOf: Map[String, Vector[Either[Int, String]]] = {
+    val m = scala.collection.mutable.Map.empty[String, Vector[Either[Int, String]]]
+    dag.topologicalOrder.foreach { n =>
+      m(n) =
+        if (isMapped(n)) Vector(Left(mappedNode(n)))
+        else if (reduces.contains(n)) Vector(Right(n))
+        else dag.predecessors(n).flatMap(m).distinct
     }
-    acc
+    m.toMap
   }
 
-  /** The reduce node's INPUT frame: the predecessor expansion, with the
-    * groupby key column attached when not co-grouped. One row per
+  /** `nodes` on their joint row identity (see [[result]]). A group's
+    * positional labels are materialized when its positional dim is in
+    * `keep`, is shared with another source (it is then a join key), or
+    * `allPositions` is set — through the group's lazy `withPositions`, so
+    * at most once per group.
+    */
+  private def frameOf(nodes: Seq[String], allPositions: Boolean,
+      keep: Set[String]): DataFrame = {
+    val sources = nodes.flatMap(sourcesOf).distinct
+    val sourceDims = sources.map {
+      case Left(i) => groups(i).dims
+      case Right(r) => dimsOf(r)
+    }
+    val shared = sourceDims.flatten.groupBy(identity)
+      .collect { case (d, occ) if occ.size > 1 => d }.toSet
+    val frames = sources.map {
+      case Left(i) =>
+        val g = groups(i)
+        g.frame(allPositions || g.positionalDim.exists(d => shared(d) || keep(d)))
+      case Right(r) => reduceFrame(r)
+    }
+    val joined = frames.zip(sourceDims).reduceLeftOption[(DataFrame, Vector[String])] {
+      case ((acc, accDims), (f, dims)) =>
+        (dimJoin(acc, f, dims.filter(accDims.contains)), (accDims ++ dims).distinct)
+    }.fold(session.range(1).drop("id"))(_._1)
+    columnsOf(nodes).foldLeft(joined)((f, n) => f.withColumn(n, columnOf(n)))
+  }
+
+  /** `nodes` and their ancestors that are columns rather than sources
+    * (neither mapped nor reduce nodes), in topological order.
+    */
+  private def columnsOf(nodes: Seq[String]): Vector[String] = {
+    val found = scala.collection.mutable.Set.empty[String]
+    def visit(n: String): Unit =
+      if (!isMapped(n) && !reduces.contains(n) && found.add(n))
+        dag.predecessors(n).foreach(visit)
+    nodes.foreach(visit)
+    dag.topologicalOrder.filter(found)
+  }
+
+  /** A derived node's value over its predecessors' columns: null for a
+    * bare input, else attr "expr", else pass-through of a single pred or
+    * struct(preds).
+    */
+  private def columnOf(n: String): Column = {
+    val preds = dag.predecessors(n)
+    dag.attrs.getOrElse(n, Map.empty).get("expr") match {
+      case _ if preds.isEmpty => lit(null).cast("string")
+      case Some(e) => expr(e)
+      case None if preds.size == 1 => col(preds.head)
+      case None => struct(preds.map(col): _*)
+    }
+  }
+
+  /** Null-safe equi-join on dim label columns (right-side keys renamed to
+    * avoid self-join ambiguity, so a null label aligns with itself); a
+    * cross join when no dim is shared.
+    */
+  private def dimJoin(left: DataFrame, right: DataFrame,
+      joinDims: Seq[String]): DataFrame =
+    if (joinDims.isEmpty) left.crossJoin(right)
+    else {
+      val renamed = joinDims.foldLeft(right)((d0, d) =>
+        d0.withColumnRenamed(d, "__jk_" + d))
+      val cond = joinDims.map(d => col(d) <=> col("__jk_" + d)).reduce(_ && _)
+      left.join(renamed, cond).drop(joinDims.map("__jk_" + _): _*)
+    }
+
+  /** A reduce node's INPUT frame: its predecessor and groupby key on their
+    * joint row identity, with the labels of the kept dims. One row per
     * consumed pred copy — also the edge set of the fan-in (each input row
     * feeds exactly one output group).
     */
-  private def reduceInput(n: String, spec: ReduceSpec, needPos: Boolean,
-      memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame = {
-    // Positional dims that survive the reduce are observed as group keys:
-    // their labels must be materialized in the predecessor frame.
-    val needPredPos = needPos || dimsOf(n).exists(isPositionalDim)
-    val predFrame0 = frameOf(spec.pred, needPredPos, memo)
-    spec.groupKey match {
-      case None => predFrame0
-      case Some(k) =>
-        // Group labels = values of key node k. The key column is already in
-        // the frame when co-grouped (the common case): single-scan groupBy,
-        // no join — a map-side-combinable hash aggregation, and the
-        // positional labels stay UNmaterialized (this branch must not pay
-        // zipWithIndex or lose the pruned parquet scan).
-        if (predFrame0.columns.contains(k)) predFrame0
-        else {
-          // not co-grouped: the key attaches via a join on the shared
-          // dims, whose label columns must exist on BOTH sides — only
-          // here may positional materialization be forced
-          val keyJoinDims = dimsOf(k).intersect(dimsOf(spec.pred))
-          val joinNeedPos = needPredPos || keyJoinDims.exists(isPositionalDim)
-          val predFrame = frameOf(spec.pred, joinNeedPos, memo)
-          val kf = frameOf(k, joinNeedPos, memo)
-          val joinDims = keyJoinDims
-            .filter(d => predFrame.columns.contains(d) && kf.columns.contains(d))
-          if (joinDims.nonEmpty) dimJoin(predFrame, kf, joinDims)
-          else {
-            val shared = predFrame.columns.intersect(kf.columns).toSeq
-            require(shared.nonEmpty, s"groupby key '$k' shares no dim with '${spec.pred}'")
-            predFrame.join(kf, shared)
-          }
-        }
-    }
+  private def reduceInput(n: String, allPositions: Boolean): DataFrame = {
+    val spec = reduces(n)
+    frameOf(spec.pred +: spec.groupKey.toSeq, allPositions, keep = dimsOf(n).toSet)
   }
 
-  /** Null-safe equi-join on dim label columns: duplicated non-key columns
-    * on the right are dropped first (identical ancestors by construction),
-    * right-side keys are renamed to avoid self-join ambiguity, and a null
-    * label aligns with itself. The one join discipline of the expansion
-    * engine, shared by predecessor merging and key attachment.
-    */
-  private def dimJoin(left: DataFrame, right: DataFrame,
-      joinDims: Seq[String]): DataFrame = {
-    val dupCols = right.columns.filter(c =>
-      left.columns.contains(c) && !joinDims.contains(c))
-    val fd = right.drop(dupCols.toIndexedSeq: _*)
-    if (joinDims.isEmpty) left.crossJoin(fd)
-    else {
-      val renamed = joinDims.foldLeft(fd)((d0, d) =>
-        d0.withColumnRenamed(d, "__jk_" + d))
-      val cond = joinDims.map(d => col(d) <=> col("__jk_" + d)).reduce(_ && _)
-      left.join(renamed, cond).drop(joinDims.map("__jk_" + _).toIndexedSeq: _*)
-    }
-  }
-
-  private def reduceFrame(n: String, spec: ReduceSpec, needPos: Boolean,
-      memo: scala.collection.mutable.Map[(String, Boolean), DataFrame]): DataFrame = {
+  private def reduceFrame(n: String): DataFrame = {
     val keptDims = dimsOf(n)
-    val input = reduceInput(n, spec, needPos, memo)
+    val input = reduceInput(n, allPositions = false)
     val attrs = dag.attrs.getOrElse(n, Map.empty)
-    val aggExpr: Column = TaskGraph.aggFor(attrs, col(spec.pred)).as(n)
+    val aggExpr: Column = TaskGraph.aggFor(attrs, col(reduces(n).pred)).as(n)
     if (keptDims.isEmpty) input.agg(aggExpr)
     else input.groupBy(keptDims.map(col): _*).agg(aggExpr)
   }
+
+  private def session: SparkSession =
+    groups.headOption.map(_.df.sparkSession).getOrElse(SparkSession.active)
 
   /** Materialized task table: one row per node copy, with the node name,
     * its index labels (as strings) and its value (as string) — the parity
@@ -1103,18 +1011,14 @@ final case class TaskGraph(
     * graphs only, like taskTable.
     */
   def edgeTable(): DataFrame = {
-    if (dag.edgeList.isEmpty) {
-      val spark = groups.headOption.map(_.df.sparkSession).getOrElse(SparkSession.active)
-      return spark.emptyDataFrame
+    if (dag.edgeList.isEmpty)
+      return session.emptyDataFrame
         .select(lit("").as("src"), expr("map()").cast("map<string,string>").as("src_index"),
           lit("").as("dst"), expr("map()").cast("map<string,string>").as("dst_index"))
-    }
-    val memo = scala.collection.mutable.Map.empty[(String, Boolean), DataFrame]
     val frames = dag.edgeList.map { case (p, c) =>
-      val frame = reduces.get(c) match {
-        case Some(spec) => reduceInput(c, spec, needPos = true, memo)
-        case None => frameOf(c, needPos = true, memo)
-      }
+      val frame =
+        if (reduces.contains(c)) reduceInput(c, allPositions = true)
+        else result(c, needPositional = true)
       // dedupe on the scalar label columns (set ops reject MAP columns),
       // then assemble the index maps
       val labelCols = (dimsOf(p) ++ dimsOf(c)).distinct

@@ -59,6 +59,25 @@ class TaskGraphProps extends Properties("TaskGraph") {
       got == expected
     }
 
+  private val repeating: Gen[List[Int]] =
+    Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, Gen.chooseNum(0, 3)))
+
+  property("stacked diamonds keep one copy per row: |result| = |input|") =
+    forAll(repeating, Gen.chooseNum(0, 6)) { (xs, depth) =>
+      import spark.implicits._
+      // the values double as labels, so both repeat
+      var g = TaskGraph(Dag.empty).mapFrame(xs.map(x => (x, x)).toDF("k", "v"),
+        Map("a" -> "v"), indexCol = Some("k"), dimName = "k")
+      var cur = "a"
+      (0 until depth).foreach { i =>
+        g = g.withExpr(s"l$i", Seq(cur), s"$cur + 1")
+          .withExpr(s"r$i", Seq(cur), s"$cur * 2")
+          .withExpr(s"j$i", Seq(s"l$i", s"r$i"), s"l$i + r$i")
+        cur = s"j$i"
+      }
+      g.result(cur).count() == xs.size.toLong
+    }
+
   property("slice-then-expand == expand-then-filter") =
     forAll(smallList, Gen.chooseNum(0, 6), Gen.chooseNum(0, 6)) { (xs, a, b) =>
       val (lo, hi) = (math.min(a, b), math.max(a, b))

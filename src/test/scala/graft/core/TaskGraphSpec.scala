@@ -385,6 +385,13 @@ class TaskGraphSpec extends AnyFunSuite {
     val rows = g.result("d").orderBy("x").collect()
     assert(rows.length == 2)
     assert(rows.map(_.getAs[Int]("d")).toSeq == Seq(24, 24))
+    // repeated labels: one copy per row, the count a chain a -> b gives
+    val rep = Seq(("x", 1), ("x", 2), ("y", 3)).toDF("idx", "v")
+    def copies(t: TaskGraph, node: String) = t.mapFrame(rep, Map("a" -> "v"),
+      indexCol = Some("idx"), dimName = "k").result(node)
+    assert(copies(TaskGraph.chain("a", "b"), "b").count() == 3)
+    val d = copies(TaskGraph(dag), "d").collect().map(_.getAs[Int]("d")).sorted.toSeq
+    assert(d == Seq(0, 3, 8), s"expected one d per row, got $d")
   }
 
   // --- N-D arrays (mapND) — graph_test.py:142-155, 970-1038 ---------------

@@ -1,10 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.{col, expr}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.SparkTestSession
+import graft.core.{Dag, SparkTestSession, TaskGraph}
 
 /** Plan-quality regression gate: the physical plans of the headline
   * queries must keep the properties that make them scale — filters
@@ -422,6 +425,98 @@ class PlanQualitySpec extends AnyFunSuite {
       .findFirstMatchIn(plan).map(_.group(1)).getOrElse("")
     assert(readSchema.contains("l_quantity") && !readSchema.contains("l_comment"),
       s"unpruned scan: $readSchema")
+  }
+
+  // --- TaskGraph expansion: plan size linear in DAG size ------------------
+
+  private val Mod = 1000003L
+
+  /** lineitem as a file-backed group labeled by its line id (which
+    * repeats in this table), value `a` = l_quantity */
+  private def lineGraph(): TaskGraph =
+    TaskGraph(Dag.empty).mapFrame(
+      Tables.lineitem(spark, dir).select(
+        expr("l_orderkey * 8 + l_linenumber").as("lid"),
+        expr("CAST(l_quantity AS BIGINT)").as("a")),
+      Map("a" -> "a"), indexCol = Some("lid"), dimName = "lid")
+
+  /** (joins, joins without a condition, scans per table) of a frame's
+    * optimized plan */
+  private def shape(df: DataFrame): (Int, Int, Map[String, Int]) = {
+    val plan = df.queryExecution.optimizedPlan
+    val joins = plan.collect { case j: Join => j }
+    val scans = plan.collect {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+        h.location.rootPaths.map(_.getName.stripSuffix(".parquet")).mkString(",")
+    }
+    (joins.size, joins.count(_.condition.isEmpty),
+      scans.groupBy(identity).map { case (t, s) => t -> s.size })
+  }
+
+  /** k stacked diamonds over node `from` (j_i from l_i and r_i, both of
+    * j_{i-1}): the graph, its sink and the sink's value per input value */
+  private def diamonds(g0: TaskGraph, from: String,
+      k: Int): (TaskGraph, String, Long => Long) = {
+    var g = g0
+    var cur = from
+    var f: Long => Long = identity
+    (0 until k).foreach { i =>
+      val (k1, b1, k2, b2) = (3 + i, 7L * i, 5 + i, 11L * i)
+      g = g.withExpr(s"l$i", Seq(cur), s"($cur * $k1 + $b1) % $Mod")
+        .withExpr(s"r$i", Seq(cur), s"($cur * $k2 + $b2) % $Mod")
+        .withExpr(s"j$i", Seq(s"l$i", s"r$i"), s"(l$i + r$i) % $Mod")
+      val prev = f
+      f = x => { val v = prev(x); ((v * k1 + b1) % Mod + (v * k2 + b2) % Mod) % Mod }
+      cur = s"j$i"
+    }
+    (g, cur, f)
+  }
+
+  test("TaskGraph: stacked diamonds and a fan plan one scan and no join") {
+    Seq(0, 1, 2, 4, 8).foreach { k =>
+      val (g, sink, f) = diamonds(lineGraph(), "a", k)
+      val total = g.reduce(key = sink, name = "total", attrs = Map("func" -> "sum"))
+        .result("total")
+      assert(shape(total) == ((0, 0, Map("lineitem" -> 1))), s"k=$k: ${shape(total)}")
+      if (k == 8) {
+        // one copy per lineitem row, repeated line ids included
+        val want = Tables.lineitem(spark, dir).select(expr("CAST(l_quantity AS BIGINT)"))
+          .collect().map(r => f(r.getLong(0))).sum
+        assert(total.collect().head.getLong(0) == want)
+      }
+    }
+    val fan = (0 until 4).foldLeft(lineGraph())((g, i) =>
+      g.withExpr(s"b$i", Seq("a"), s"(a * ${i + 2}) % $Mod"))
+      .withExpr("f", (0 until 4).map(i => s"b$i"), "b0 + b1 + b2 + b3")
+    assert(shape(fan.result("f")) == ((0, 0, Map("lineitem" -> 1))))
+  }
+
+  test("TaskGraph: one cross join per independent dim, none more") {
+    val chained = TaskGraph(Dag.fromEdges("a" -> "c", "b" -> "c")
+        .addNode("c", Map("expr" -> "CAST(length(a) + length(b) AS BIGINT)")))
+      .mapFrame(Tables.region(spark, dir), Map("a" -> "r_name"))
+      .mapFrame(Tables.supplier(spark, dir), Map("b" -> "s_name"))
+    val crossed = (1, 1, Map("region" -> 1, "supplier" -> 1))
+    assert(shape(chained.result("c")) == crossed)
+    // diamonds over the crossed node add columns, not joins
+    val (g, sink, _) = diamonds(chained, "c", 2)
+    assert(shape(g.result(sink)) == crossed)
+    val three = TaskGraph.fromEdges("a" -> "d", "b" -> "d", "c" -> "d")
+      .mapFrame(Tables.region(spark, dir), Map("a" -> "r_name"))
+      .mapFrame(Tables.supplier(spark, dir), Map("b" -> "s_name"))
+      .mapFrame(Tables.nation(spark, dir), Map("c" -> "n_name"))
+    assert(shape(three.result("d")) ==
+      ((2, 2, Map("region" -> 1, "supplier" -> 1, "nation" -> 1))))
+  }
+
+  test("TaskGraph: a groupby key that is not co-grouped costs one join") {
+    val key = Tables.lineitem(spark, dir).select(
+      expr("l_orderkey * 8 + l_linenumber").as("lid"), col("l_returnflag").as("k"))
+    val g = lineGraph()
+      .mapFrame(key, Map("k" -> "k"), indexCol = Some("lid"), dimName = "lid")
+      .withExpr("v", Seq("a"), "a * 2")
+      .groupby("k").reduce(key = "v", name = "total", attrs = Map("func" -> "sum"))
+    assert(shape(g.result("total")) == ((1, 0, Map("lineitem" -> 2))))
   }
 
   test("native as-of join: dedicated operator, one exchange per side") {
